@@ -16,8 +16,14 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from .session import local_df
 
 PHASE_UNPACKED = "Unpacked"  # main.go:132 readiness predicate value
+REGISTRY_SCHEMA = T.StructType(
+    [T.StructField(c, T.StringType()) for c in ("name", "phase", "last_modified", "source")]
+)
 
 
 class CatalogNotReadyError(RuntimeError):
@@ -49,12 +55,11 @@ class CatalogRegistry:
         return list(self._entries.values())
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        rows = [
-            (e.name, e.phase, e.last_modified, e.source)
-            for e in self._entries.values()
-        ]
-        return spark.createDataFrame(
-            rows, "name string, phase string, last_modified string, source string"
+        entries = self._entries.values()
+        return local_df(
+            spark,
+            REGISTRY_SCHEMA,
+            [[getattr(e, f.name) for e in entries] for f in REGISTRY_SCHEMA],
         )
 
     # -- S2: point lookup by primary key --------------------------------

@@ -10,6 +10,10 @@ path construction.
 
 All listing results are sorted ascending like the reference
 (sort.Strings — main.go:155,197,238).
+
+``ConsoleEngine`` serves these endpoints from ``engine.SnapshotIndex``,
+built once per snapshot; the functions here are its reference
+implementation, and a parity test holds the two to the same answers.
 """
 
 from __future__ import annotations
@@ -42,8 +46,9 @@ def list_packages(metas: DataFrame) -> DataFrame:
     """Q1 (main.go:124-164): distinct level-1 partition keys, sorted.
     ``SELECT DISTINCT package FROM metas ORDER BY package``.
 
-    Over the snapshot store this is a partition listing — Catalyst
-    answers it from partition metadata without scanning data files.
+    Over the snapshot store this still scans the data files: Catalyst
+    answers a partition-column-only query from partition metadata only
+    with ``spark.sql.optimizer.metadataOnly``, which is off by default.
     """
     return metas.select("package").distinct().orderBy("package")
 
@@ -86,26 +91,44 @@ def get_object(
     ).select("blob")
 
 
+def package_doc(blob: str | Column = "blob") -> Column:
+    """Typed decode of an ``olm.package`` blob (``from_json`` ≙
+    json.Unmarshal at main.go:306); a malformed blob decodes to nulls."""
+    return F.from_json(blob, PACKAGE_BLOB_SCHEMA)
+
+
+def is_package_row(package: str | Column) -> Column:
+    """The ``olm.package`` row of ``package``: the reference reads the
+    blob whose name equals the package name (main.go:291-295)."""
+    return (
+        (F.col("package") == package)
+        & (F.col("schema") == "olm.package")
+        & (F.col("name") == package)
+    )
+
+
+def has_icon(doc: Column) -> Column:
+    """A decoded package doc carries an icon (main.go:310-313)."""
+    return doc["icon"].isNotNull() & doc["icon"]["base64data"].isNotNull()
+
+
+def icon_fields(doc: Column) -> tuple[Column, Column]:
+    """(icon bytes, media type) of a decoded package doc (main.go:314-315)."""
+    return F.unbase64(doc["icon"]["base64data"]), doc["icon"]["mediatype"]
+
+
 def get_package_icon(metas: DataFrame, package: str) -> DataFrame:
     """Q5 (main.go:272-320): typed decode + nested extraction + null test.
 
-    Reads the ``olm.package`` blob whose name equals the package name
-    (the reference assumes name == package, main.go:291-295), decodes it
-    (``from_json`` ≙ json.Unmarshal at main.go:306), drops icon-less
-    packages (main.go:310-313), and returns the decoded binary icon with
-    its media type (main.go:314-315).
+    Reads the package's own ``olm.package`` blob, decodes it, drops
+    icon-less packages, and returns the decoded binary icon with its
+    media type.
     """
-    doc = F.from_json("blob", PACKAGE_BLOB_SCHEMA).alias("doc")
+    doc = F.col("doc")
+    data, media = icon_fields(doc)
     return (
-        metas.filter(
-            (F.col("package") == package)
-            & (F.col("schema") == "olm.package")
-            & (F.col("name") == package)
-        )
-        .select(doc)
-        .where(F.col("doc.icon").isNotNull() & F.col("doc.icon.base64data").isNotNull())
-        .select(
-            F.unbase64(F.col("doc.icon.base64data")).alias("icon_data"),
-            F.col("doc.icon.mediatype").alias("icon_mediatype"),
-        )
+        metas.filter(is_package_row(package))
+        .select(package_doc().alias("doc"))
+        .where(has_icon(doc))
+        .select(data.alias("icon_data"), media.alias("icon_mediatype"))
     )

@@ -9,9 +9,11 @@ Re-expresses the reference's caching client (S3 + C1,
   the existing snapshot with *zero Spark jobs launched* — the 304 analog.
 - **LRU + TTL** (cache.go:26-28): a bounded map of catalog → snapshot,
   default capacity 100 entries / 24 h staleness bound, both configurable
-  (the reference hardcodes them). Eviction unpersists any cached
-  DataFrame and drops the snapshot directory — the ``os.RemoveAll``
-  eviction side effect (cache.go:30-33).
+  (the reference hardcodes them). A slot holds what serves its
+  snapshot: a cached DataFrame, or the lookup index a caller asks
+  ``get`` to build at admit (``ConsoleEngine`` does). Eviction drops the
+  slot, unpersists a cached DataFrame and removes the snapshot directory
+  — the ``os.RemoveAll`` eviction side effect (cache.go:30-33).
 
 Unlike the reference, refresh is race-safe and idempotent: re-publishing
 an unchanged version is a no-op (the reference would fail the symlink
@@ -28,6 +30,7 @@ import urllib.request
 from collections import OrderedDict
 from collections.abc import Callable
 from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -42,6 +45,7 @@ class _CacheSlot:
     info: SnapshotInfo
     df: DataFrame | None
     cached_at: float
+    index: Any = None  # ``index(snapshot)``, built at admit
 
 
 class FreshnessManager:
@@ -75,23 +79,36 @@ class FreshnessManager:
         source_version: Callable[[], str],
         build: Callable[[SparkSession], DataFrame],
         cache_df: bool = True,
-    ) -> DataFrame:
+        index: Callable[[DataFrame], Any] | None = None,
+    ) -> Any:
         """Serve ``catalog``, re-ingesting only if the source changed.
 
-        ``source_version`` is the Last-Modified probe; ``build`` produces
-        the snapshot DataFrame when (and only when) a refresh is needed.
+        ``source_version`` is the Last-Modified probe, called once per
+        ``get``; ``build`` produces the snapshot DataFrame when (and only
+        when) a refresh is needed.
+
+        Returns the snapshot DataFrame, or with ``index`` the value of
+        ``index(snapshot)``: it is built once, when the slot is admitted,
+        held in the slot in place of a cached DataFrame, and returned by
+        every 304 hit until the slot is evicted, expired or invalidated. A
+        slot admitted without an index is admitted again, with one.
         """
         now = self.clock()
         slot = self._lru.get(catalog)
-        if slot is not None and now - slot.cached_at <= self.ttl:
-            version = source_version()
-            if version == slot.info.version:
-                # 304 path: serve cached snapshot, zero recompute.
-                self._lru.move_to_end(catalog)
-                self.hit_count += 1
-                return slot.df if slot.df is not None else self._read(spark, catalog)
-
         version = source_version()
+        if (
+            slot is not None
+            and now - slot.cached_at <= self.ttl
+            and version == slot.info.version
+            and (index is None or slot.index is not None)
+        ):
+            # 304 path: serve cached snapshot, zero recompute.
+            self._lru.move_to_end(catalog)
+            self.hit_count += 1
+            if index is not None:
+                return slot.index
+            return slot.df if slot.df is not None else self._read(spark, catalog)
+
         current = self.store.current(catalog)
         if current is not None and current.version == version:
             info = current  # already published by a previous process
@@ -99,10 +116,13 @@ class FreshnessManager:
             info = self.store.publish(build(spark), catalog, version)
             self.refresh_count += 1
         df = self._read(spark, catalog)
-        if cache_df:
-            df = df.cache()
-        self._admit(catalog, _CacheSlot(info, df if cache_df else None, now))
-        return df
+        slot = _CacheSlot(info, None, now)
+        if index is not None:
+            slot.index = index(df)
+        elif cache_df:
+            slot.df = df = df.cache()
+        self._admit(catalog, slot)
+        return slot.index if index is not None else df
 
     def _read(self, spark: SparkSession, catalog: str) -> DataFrame:
         if self.balancer is not None:

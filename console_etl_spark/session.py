@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -78,6 +79,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_df(spark: SparkSession, schema: StructType, columns: list[list]) -> DataFrame:
+    """A DataFrame over driver-side column values, one list per field
+    of ``schema``.
+
+    It is built from an Arrow table, so it plans as a LocalRelation and
+    collecting it runs no Spark job. ``createDataFrame`` over a list of
+    rows would parallelise them and start Python workers instead.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):

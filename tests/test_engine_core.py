@@ -355,6 +355,23 @@ def test_ttl_expiry_forces_reprobe(spark, store, catalog_metas):
     mgr.get(spark, "cat0", probe, lambda s: df)
     assert len(probes) >= 2
 
+    # an index built at admit lives as long as its slot: a hit returns it,
+    # a stale slot rebuilds it, and expire() drops it with the slot
+    built = []
+
+    def index(snapshot):
+        built.append(snapshot.count())
+        return len(built)
+
+    assert mgr.get(spark, "cat1", probe, lambda s: df, index=index) == 1
+    assert mgr.get(spark, "cat1", probe, lambda s: df, index=index) == 1
+    clock[0] += 200
+    assert mgr.get(spark, "cat1", probe, lambda s: df, index=index) == 2
+    clock[0] += 200
+    assert "cat1" in mgr.expire()
+    assert mgr.get(spark, "cat1", probe, lambda s: df, index=index) == 3
+    assert built == [df.count()] * 3
+
 
 def test_lru_eviction_drops_snapshot(spark, store, catalog_metas):
     df = shred_metas(catalog_metas.drop("catalog")).limit(20)
@@ -364,6 +381,23 @@ def test_lru_eviction_drops_snapshot(spark, store, catalog_metas):
     assert store.current("a") is None  # evicted (os.RemoveAll analog)
     assert store.current("b") is not None
     assert store.current("c") is not None
+
+    # an index slot is evicted like any other, its index with it, and the
+    # next request rebuilds both; invalidate() drops it the same way
+    built = []
+
+    def index(snapshot):
+        built.append(1)
+        return len(built)
+
+    assert mgr.get(spark, "d", lambda: "v1", lambda s: df, index=index) == 1
+    assert mgr.get(spark, "d", lambda: "v1", lambda s: df, index=index) == 1
+    for cat in ["a", "b"]:
+        mgr.get(spark, cat, lambda: "v1", lambda s: df, cache_df=False)
+    assert store.current("d") is None
+    assert mgr.get(spark, "d", lambda: "v1", lambda s: df, index=index) == 2
+    mgr.invalidate("d")
+    assert mgr.get(spark, "d", lambda: "v1", lambda s: df, index=index) == 3
 
 
 # --------------------------------------------------------------------------
@@ -696,6 +730,7 @@ class TestHttpFreshness:
         df3 = get_http_catalog(mgr, spark, "web", src)
         assert (mgr.refresh_count, src.fetch_count) == (2, 2)
         assert df3.count() == 1
+        assert src.probe_count == 3  # one HEAD per get, a changed upstream too
 
     def test_conditional_fetch_returns_none_on_304(self, http_source_dir, tmp_path):
         from console_etl_spark.refresh import HttpStreamSource
